@@ -74,25 +74,34 @@ object PipelineExprHelpers {
   /** Squared L2 distance of one (double-array) row against every row of
     * a constant centroid matrix, in centroid order — the loop form of
     * `transform(centroidLit, c => aggregate(zip_with(c, ne, (x,y) =>
-    * (x-y)²), 0.0, +))`, same subtraction and fold order. */
+    * (x-y)²), 0.0, +))`, same subtraction and fold order. A width
+    * mismatch or a null element gives k null distances, exactly like the
+    * Column form (zip_with pads with nulls, and a null poisons the sum). */
   def centroidDists(e: ArrayData,
                     matrix: Array[Array[Double]]): ArrayData = {
     val k = matrix.length
-    val out = new Array[Double](k)
-    var c = 0
-    while (c < k) {
-      val cent = matrix(c)
-      var s = 0.0
-      var i = 0
-      while (i < cent.length) {
-        val d = cent(i) - e.getDouble(i)
-        s += d * d
-        i += 1
+    val dim = if (k > 0) matrix(0).length else 0
+    var ok = e.numElements() == dim
+    var i = 0
+    while (ok && i < dim) { if (e.isNullAt(i)) ok = false; i += 1 }
+    if (!ok) new GenericArrayData(new Array[Any](k))
+    else {
+      val out = new Array[Double](k)
+      var c = 0
+      while (c < k) {
+        val cent = matrix(c)
+        var s = 0.0
+        i = 0
+        while (i < dim) {
+          val d = cent(i) - e.getDouble(i)
+          s += d * d
+          i += 1
+        }
+        out(c) = s
+        c += 1
       }
-      out(c) = s
-      c += 1
+      new GenericArrayData(out)
     }
-    new GenericArrayData(out)
   }
 }
 
@@ -141,7 +150,7 @@ case class LshBuckets(child: Expression,
 case class CentroidDists(child: Expression, matrix: Array[Array[Double]])
     extends Expression {
   override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = child.nullable
   override def foldable: Boolean = false
 

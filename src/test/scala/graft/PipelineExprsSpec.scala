@@ -89,16 +89,30 @@ class PipelineExprsSpec extends AnyFunSuite {
         val d = x.cast("double") - y.cast("double"); d * d
       }), lit(0.0), (acc, v) => acc + v)
     val ne = transform($"embedding", v => v.cast("double"))
+    // guard inputs: a short vector, a long one and a null element — the
+    // Column form gives k null distances for each
+    def vec(n: Int) = transform(sequence(lit(0), lit(n - 1)),
+      i => when(i =!= 5 || $"id" =!= 1002, i.cast("double") / 64.0))
+    val odd = spark.range(1000, 1003).select($"id".as("vec_id"),
+      when($"id" === 1000, vec(dim - 8)).when($"id" === 1001, vec(dim + 3))
+        .otherwise(vec(dim)).as("ne"))
     val df = embFrame(200)
       .select($"vec_id", ne.as("ne"))
+      .union(odd)
       .select($"vec_id",
         PipelineExprs.centroidDists($"ne", cents).as("got"),
         transform(centLit, c => l2(c, $"ne")).as("want"))
-    df.collect().foreach { r =>
-      val got = r.getSeq[Double](1)
-      val want = r.getSeq[Double](2)
+    val rows = df.collect()
+    assert(rows.length == 203)
+    rows.foreach { r =>
+      val got = r.getSeq[Any](1)
+      val want = r.getSeq[Any](2)
       // bit-identical, not approximately equal: same IEEE fold
       assert(got == want, s"dist mismatch for vec ${r.getLong(0)}")
+    }
+    rows.filter(_.getLong(0) >= 1000).foreach { r =>
+      assert(r.getSeq[Any](1) == Seq.fill(k)(null),
+        s"guard input ${r.getLong(0)}")
     }
   }
 
