@@ -2,7 +2,6 @@ package graft
 
 import java.util.Locale
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 import graft.core.EngineCfg
@@ -29,9 +28,12 @@ import graft.ingest.CorpusGen
   * is locale-sensitive and a comma-decimal JVM locale would emit
   * unparseable JSON (round-1 driver recorded parsed:null).
   *
-  * Scaling evidence (north rule, N vs 4N): `ScalingBench` writes
-  * `data/scaling.json`; when present its content is embedded verbatim under
-  * the `scaling` key so the per-round BENCH record carries it.
+  * Scaling evidence (north rule, N vs 4N): the committed ladder records
+  * `data/scaling.json` (threads) and `data/scaling_mx.json` (executors)
+  * are embedded verbatim under `scaling` / `scaling_executors`, and their
+  * top-level `efficiency_*` fields are copied into the compact line. They
+  * are read, not measured, here; `ScalingBench <out.json>` measures a new
+  * ladder in one invocation.
   */
 object Bench {
 
@@ -74,7 +76,7 @@ object Bench {
     * (ADVICE r3: late TaskEnd events could leak into the next rep).
     * LiveListenerBus.waitUntilEmpty is private[spark] (public bytecode);
     * fall back to a short sleep if reflection fails. */
-  private def drainListenerBus(
+  private[graft] def drainListenerBus(
       sc: org.apache.spark.SparkContext): Unit =
     try {
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
@@ -88,28 +90,15 @@ object Bench {
       }
     } catch { case _: Throwable => Thread.sleep(250) }
 
-  /** Tracks the max single-task wall time of any stage whose run overlaps
-    * the measured region — the straggler metric for the skewed low-zoom
-    * tile aggregation (VERDICT r1 #2). */
-  private final class MaxTaskListener extends SparkListener {
-    @volatile var maxTaskMs: Long = 0L
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val d = if (t.taskInfo != null) t.taskInfo.duration else 0L
-      if (d > maxTaskMs) maxTaskMs = d
-    }
-    def reset(): Unit = maxTaskMs = 0L
-  }
-
-  def main(args: Array[String]): Unit = {
-    Locale.setDefault(Locale.ROOT)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  /** The session of Bench and BenchExtra: `local[cpus]`, 4 task waves per
+    * core, AQE on. */
+  private[graft] def session(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       // 4 task waves per core; cap AQE's coalesce target below the 64m
       // default — tile assembly is CPU-per-byte heavy and the default
       // coalesces it to a handful of tasks
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 4).toString)
+      .config("spark.sql.shuffle.partitions", (cpus * 4).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
       .config("spark.sql.session.timeZone", "UTC")
@@ -120,10 +109,29 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** A ladder record's own top-level `efficiency_<pair>`, or -1.0 when the
+    * pair is missing. The nested `pure_cpu_calibration` block carries its
+    * own efficiency_* keys and is never read: the mx ladder with no level-1
+    * windows must report -1.0 for 1_to_4, not the calibration's figure. */
+  private[graft] def effOf(src: String, pair: String): Double = {
+    val topLevel = src.split("\"pure_cpu_calibration\"", 2)(0)
+    s""""efficiency_$pair":([0-9.]+)""".r.findFirstMatchIn(topLevel)
+      .map(_.group(1).toDouble).getOrElse(-1.0)
+  }
+
+  def main(args: Array[String]): Unit = {
+    Locale.setDefault(Locale.ROOT)
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = session(cpus.toInt)
     import spark.implicits._
 
-    val maxTask = new MaxTaskListener
-    spark.sparkContext.addSparkListener(maxTask)
+    // max single-task wall time of any task ending in the measured region —
+    // the straggler metric for the skewed low-zoom tile aggregation
+    val stats = new StageStats(spark.sparkContext)
 
     val cfg = EngineCfg.default
     val p = CorpusGen.bench
@@ -186,14 +194,14 @@ object Bench {
     val runs = (1 to reps).map { i =>
       // drain the async listener bus so the reset can't erase (and the
       // read can't miss) TaskEnd events from the adjacent rep (ADVICE r3)
-      drainListenerBus(spark.sparkContext)
-      maxTask.reset()
+      stats.drain()
+      stats.reset()
       timed(s"pyramid_mvt_rep$i") {
         nTiles = graft.tile.Pyramid
           .tiles(spark, features, cfg, "tile", "mvt", 0, 14).count()
       }
-      drainListenerBus(spark.sparkContext)
-      (results(s"pyramid_mvt_rep$i"), maxTask.maxTaskMs / 1e3)
+      stats.drain()
+      (results(s"pyramid_mvt_rep$i"), stats.maxTaskMs / 1e3)
     }
     results("pyramid_mvt_z0_14") = runs.map(_._1).min
     val pyramidMaxTaskSec = runs.minBy(_._1)._2
@@ -270,15 +278,6 @@ object Bench {
     // in the full record, both efficiency pairs in the compact headline
     val scaling = fileOrNull("/root/repo/data/scaling.json")
     val scalingMx = fileOrNull("/root/repo/data/scaling_mx.json")
-    // Match only the ladder's OWN top-level efficiency fields: the nested
-    // pure_cpu_calibration block carries its own efficiency_* keys, and the
-    // mx ladder (no level-1 windows yet) must report -1.0 for 1_to_4, not
-    // the calibration's figure.
-    def effOf(src: String, pair: String): Double = {
-      val topLevel = src.split("\"pure_cpu_calibration\"", 2)(0)
-      s""""efficiency_$pair":([0-9.]+)""".r.findFirstMatchIn(topLevel)
-        .map(_.group(1).toDouble).getOrElse(-1.0)
-    }
     val json =
       s"""{"metric":"mvt_tiles_per_sec_z0_14","value":${num(tilesPerSec)},""" +
         s""""unit":"tiles/sec","tiles":$nTiles,"features":$nFeatures,""" +

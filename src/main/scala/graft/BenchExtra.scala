@@ -2,7 +2,6 @@ package graft
 
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Auxiliary measurement main for the optimization rounds (guide §1.4) —
@@ -18,10 +17,14 @@ import org.apache.spark.sql.execution.ExplainMode
   *   runMain graft.BenchExtra time <reps> [name ...]
   *     — run each query through the noop sink `reps` times and print one
   *       JSON line with per-rep seconds.
+  *   runMain graft.BenchExtra stages <name>
+  *     — run one query twice (the first warms JIT and codegen) and print
+  *       the warm run's stages by task time.
+  *   runMain graft.BenchExtra dig
+  *     — dig the bench corpus twice and print the warm run's stages.
   *
-  * Same session configuration as [[Bench]] (env-parameterised master,
-  * shuffle partitions, AQE) so plans and timings match the gate record's
-  * environment.
+  * Same session as [[Bench]] (`Bench.session`) so plans and timings match
+  * the gate record's environment.
   */
 object BenchExtra {
 
@@ -31,18 +34,8 @@ object BenchExtra {
   def main(args: Array[String]): Unit = {
     Locale.setDefault(Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 4).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
     val mode = if (args.nonEmpty) args(0) else "plans"
     mode match {
@@ -100,60 +93,13 @@ object BenchExtra {
         out.append("}")
         println("NOOP_TIMES " + out.result())
       case "stages" =>
-        // run one declared query twice (warm JIT) with a per-stage
-        // listener; print stages of the second run sorted by task-sec
-        import org.apache.spark.scheduler._
         val name = args(1)
-        val done = new scala.collection.mutable.ArrayBuffer[
-          (Int, String, Int, Double, Double)]()
-        spark.sparkContext.addSparkListener(new SparkListener {
-          override def onStageCompleted(
-              s: SparkListenerStageCompleted): Unit = {
-            val i = s.stageInfo
-            val wall = (i.completionTime.getOrElse(0L) -
-              i.submissionTime.getOrElse(0L)) / 1e3
-            done.synchronized {
-              done += ((i.stageId, i.name.split("\n")(0).take(60),
-                i.numTasks, wall, i.taskMetrics.executorRunTime / 1e3))
-            }
-          }
-        })
         val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        println(f"COLD ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        done.synchronized(done.clear())
-        val t1 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val wall = (System.nanoTime() - t1) / 1e9
-        Thread.sleep(500)
-        println(f"WARM $name wall=$wall%.2f s; stages by task-sec:")
-        done.synchronized(done.toSeq).sortBy(-_._5).take(25).foreach {
-          case (id, nm, nt, w, ts) =>
-            println(f"  $id%5d $nm%-60s $nt%5d ${w}%7.2f ${ts}%8.2f")
-        }
+        val stats = new StageStats(spark.sparkContext)
+        coldThenWarm(name, stats)(fn(spark, sfDir).count())
+        printStages(stats, 25)
       case "dig" =>
-        // bench-corpus dig with a per-stage listener: where do the
-        // seconds go (stage name, task count, total task time, max task)
-        import org.apache.spark.scheduler._
         import spark.implicits._
-        val stages = new java.util.concurrent.ConcurrentHashMap[
-          Int, (String, Long)]()
-        val done = new scala.collection.mutable.ArrayBuffer[
-          (Int, String, Int, Double, Double)]()
-        spark.sparkContext.addSparkListener(new SparkListener {
-          override def onStageCompleted(
-              s: SparkListenerStageCompleted): Unit = {
-            val i = s.stageInfo
-            val wall = (i.completionTime.getOrElse(0L) -
-              i.submissionTime.getOrElse(0L)) / 1e3
-            done.synchronized {
-              done += ((i.stageId, i.name.split("\n")(0).take(60),
-                i.numTasks, wall,
-                i.taskMetrics.executorRunTime / 1e3))
-            }
-          }
-        })
         val cfg = graft.core.EngineCfg.default
         val p = graft.ingest.CorpusGen.bench
         val docs = spark.range(0,
@@ -163,21 +109,39 @@ object BenchExtra {
         docs.count()
         val entities = graft.extract.Extract.entities(docs).cache()
         entities.count()
-        // warm rep (JIT) then the measured rep
-        graft.dig.Dig.features(spark, entities, cfg).count()
-        done.synchronized(done.clear())
-        val t0 = System.nanoTime()
-        val n = graft.dig.Dig.features(spark, entities, cfg).count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500)
-        println(f"DIG n=$n wall=$wall%.2f s; stages (id, name, tasks, wall s, task-sec):")
-        done.synchronized(done.toSeq).sortBy(-_._5).foreach {
-          case (id, nm, nt, w, ts) =>
-            println(f"  $id%5d $nm%-60s $nt%5d ${w}%7.2f ${ts}%8.2f")
-        }
+        val stats = new StageStats(spark.sparkContext)
+        coldThenWarm("dig", stats)(
+          graft.dig.Dig.features(spark, entities, cfg).count())
+        printStages(stats, Int.MaxValue)
       case other =>
-        System.err.println(s"unknown mode $other (plans|time|dig)")
+        System.err.println(s"unknown mode $other (plans|time|stages|dig)")
     }
     spark.stop()
+  }
+
+  /** Run `f` cold (JIT and codegen), then warm with `stats` reset, and
+    * print both wall times. */
+  private def coldThenWarm(label: String, stats: StageStats)(f: => Any): Unit = {
+    def secs(t0: Long) = (System.nanoTime() - t0) / 1e9
+    val c0 = System.nanoTime()
+    f
+    val cold = secs(c0)
+    stats.drain()
+    stats.reset()
+    val w0 = System.nanoTime()
+    f
+    val warm = secs(w0)
+    stats.drain()
+    println(f"$label cold=$cold%.2f s warm=$warm%.2f s; warm stages:")
+  }
+
+  /** The stage table of `stats`, heaviest task time first. */
+  private def printStages(stats: StageStats, limit: Int): Unit = {
+    println(f"  ${"stage"}%5s ${"name"}%-60s ${"tasks"}%5s ${"wall s"}%7s" +
+      f" ${"task s"}%7s ${"max s"}%7s ${"cpu s"}%7s")
+    stats.snapshot.sortBy(-_.taskMs).take(limit).foreach { s =>
+      println(f"  ${s.id}%5d ${s.name}%-60s ${s.tasks}%5d ${s.wallMs / 1e3}%7.2f" +
+        f" ${s.taskMs / 1e3}%7.2f ${s.maxTaskMs / 1e3}%7.2f ${s.cpuNs / 1e9}%7.2f")
+    }
   }
 }

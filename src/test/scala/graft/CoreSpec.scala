@@ -267,4 +267,57 @@ class BenchRecordSpec extends AnyFunSuite {
     val r = Bench.timeOrErr { val _ = 1 + 1 }
     assert(r.isRight && r.toOption.get >= 0.0)
   }
+
+  private def committed(name: String): String =
+    java.nio.file.Files.readString(java.nio.file.Paths.get(s"data/$name"))
+  private def parse(json: String) =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+
+  // levels 1, 2, 4: the 1→4 pair is present, the 2→8 pair is not, while the
+  // calibration (levels 2 and 8) has only 2→8
+  private val newRecord = ScalingBench.record(
+    Map(1 -> Seq(9.0, 8.0, 10.0), 2 -> Seq(5.0, 4.0), 4 -> Seq(2.5, 3.0)),
+    1000L, Map(2 -> Seq(3.0), 8 -> Seq(3.0, 4.0)), "m", "abc")
+
+  test("effOf: committed ladders read their own top-level pairs") {
+    val s = committed("scaling.json")
+    val mx = committed("scaling_mx.json")
+    assert(Bench.effOf(s, "1_to_4") === 1.017)
+    assert(Bench.effOf(s, "2_to_8") === 0.804)
+    assert(Bench.effOf(mx, "1_to_4") === 0.833)
+    assert(Bench.effOf(mx, "2_to_8") === 0.740)
+    assert(Bench.effOf(s, "4_to_16") === -1.0)
+    assert(Bench.effOf("null", "1_to_4") === -1.0)
+  }
+
+  test("effOf: a new record's pairs, never the calibration's") {
+    assert(Bench.effOf(newRecord, "1_to_4") === 0.8)
+    // 2→8 exists only inside pure_cpu_calibration
+    assert(parse(newRecord).at("/pure_cpu_calibration/efficiency_2_to_8")
+      .asDouble === 1.0)
+    assert(Bench.effOf(newRecord, "2_to_8") === -1.0)
+  }
+
+  test("record: every rep, min and median per level, pairs only when both") {
+    val j = parse(newRecord)
+    val lv = j.get("levels")
+    assert(lv.size === 3)
+    def level(i: Int) = lv.get(i)
+    assert((0 until 3).map(level(_).get("level").asInt) === Seq(1, 2, 4))
+    assert(level(0).get("reps").size === 3)
+    assert(level(0).get("reps").get(2).asDouble === 10.0)
+    assert(level(0).get("sec_min").asDouble === 8.0)
+    assert(level(0).get("sec_med").asDouble === 9.0)
+    assert(level(1).get("sec_med").asDouble === 4.5)
+    assert(level(2).get("tiles").asLong === 1000L)
+    assert(level(2).get("sec_med").asDouble === 2.75)
+    assert(level(2).get("per_sec").asDouble === 400.0)
+    assert(j.has("efficiency_1_to_4"))
+    assert(!j.has("efficiency_2_to_8"))
+    assert(!j.has("efficiency_4_to_16"))
+    val c = j.get("pure_cpu_calibration")
+    assert(c.get("levels").get(1).get("units").asLong === 256L)
+    assert(!c.has("efficiency_1_to_4"))
+    assert(j.get("method").asText === "m" && j.get("commit").asText === "abc")
+  }
 }

@@ -6,7 +6,7 @@
 #
 #   tools/spark_submit.sh graft.Bench
 #   tools/spark_submit.sh graft.Verify /root/testdata/sf0.01 /tmp/out
-#   tools/spark_submit.sh graft.ScalingBench
+#   tools/spark_submit.sh graft.ScalingBench <out.json>
 set -e
 cd "$(dirname "$0")/.."
 CLASS=${1:?usage: spark_submit.sh <mainClass> [args...]}; shift
